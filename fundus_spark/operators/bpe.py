@@ -142,6 +142,8 @@ def bpe_train(
     to skip the local-vs-distributed guard's count job too."""
     from .adaptive import is_cheap_rescan
 
+    if word_freq_count is not None and word_freq is None:
+        raise ValueError("word_freq_count counts the rows of word_freq; pass both or neither")
     spark = df.sparkSession
     base = word_freq if word_freq is not None else _word_freq(df, text_col)
     words = base.withColumn("s", _spaced(F.col("word")))

@@ -26,33 +26,54 @@ Scale design (SURVEY.md §3.2 lifecycle):
   REPLACES the crashed attempt's orphaned metrics partitions instead
   of duplicating them, so lineage reads need no dedup rule and the
   commit phase does not scale with bucket count.
+* Job budget: a fresh pass runs 7 Spark jobs whatever ``n_buckets`` is
+  (data write, metrics write and the per-bucket metrics collect at two
+  jobs each under AQE, one manifest append); a resume that finds every
+  bucket committed runs 1 (the manifest read). Every read-back passes
+  its known schema (:data:`OUTPUT_SCHEMA`, ``METRICS_SCHEMA``,
+  ``MANIFEST_SCHEMA``), because an inferred ``spark.read.parquet``
+  costs a footer-reading job of its own. The manifest batch is an
+  Arrow table, which plans as a JVM local relation; a list of Python
+  tuples would be pickled through a Python worker. The run's committed
+  manifest rows are read once, at the start, and ``JobResult`` totals
+  are those rows plus the rows this call appends, so the manifest is
+  not scanned again at the end.
 
 Resume read-back contract (object stores / Iceberg): the read-back and
 resume logic rely ONLY on partition-pruned scans of the output table —
-``spark.read.parquet(output).where(col("bucket").isin(...))`` here,
-which on a Hive-layout store prunes to the ``bucket=K`` directories via
-the partition filter (verified by ``tests/test_spark_e2e.py``'s
-pruned-read assertion) and on Iceberg becomes the identical
-``.where(...)`` over the table's bucket partition — a metadata-only
-prune, no directory listing. Nothing reads ``{output}/bucket=K`` paths
-directly, so swapping the parquet sink for an Iceberg catalog table
-changes only the write (``writeTo(...).overwritePartitions()``) and
-``append_rows``.
+``spark.read.schema(OUTPUT_SCHEMA).parquet(output).where(col("bucket").isin(...))``
+here, which on a Hive-layout store prunes to the ``bucket=K``
+directories via the partition filter (verified by
+``tests/test_spark_e2e.py``'s pruned-read assertion) and on Iceberg
+becomes the identical ``.where(...)`` over the table's bucket partition
+— a metadata-only prune, no directory listing. Nothing reads
+``{output}/bucket=K`` paths directly, so swapping the parquet sink for
+an Iceberg catalog table changes only the write
+(``writeTo(...).overwritePartitions()``) and ``append_rows``.
 """
 
 from __future__ import annotations
 
-import datetime
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import List, Optional
 
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .extract_stage import extract_articles
-from .lineage import MANIFEST_SCHEMA, append_rows, bucketed_partition_metrics, committed_buckets
+from .extract_stage import EXTRACTION_SCHEMA, extract_articles
+from .lineage import MANIFEST_SCHEMA, METRICS_SCHEMA, append_rows, bucketed_partition_metrics
+
+#: The output table as written: the stage's columns plus the partition column.
+OUTPUT_SCHEMA = StructType(EXTRACTION_SCHEMA.fields + [StructField("bucket", IntegerType())])
+
+_TOTALS = ("input_turns", "output_turns", "parse_failures")
+_SUMS = (*_TOTALS, "bytes_processed")
 
 
 @dataclass
@@ -65,6 +86,17 @@ class JobResult:
     output_turns: int = 0
     parse_failures: int = 0
     wall_seconds: float = 0.0
+
+
+def _committed_rows(spark: SparkSession, manifest_path: str, run_id: str) -> List[dict]:
+    """This run's manifest rows (bucket and totals); empty before the
+    first commit."""
+    try:
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+    except AnalysisException:  # no manifest yet
+        return []
+    rows = manifest.where(F.col("run_id") == run_id).select("bucket", *_TOTALS).collect()
+    return [r.asDict() for r in rows]
 
 
 def run_extraction_job(
@@ -81,7 +113,8 @@ def run_extraction_job(
     started = time.time()
     result = JobResult(run_id=run_id, buckets_total=n_buckets)
 
-    done = committed_buckets(spark, manifest_path, run_id)
+    manifest_rows = _committed_rows(spark, manifest_path, run_id)
+    done = {r["bucket"] for r in manifest_rows}
     result.buckets_skipped = sorted(b for b in range(n_buckets) if b in done)
     remaining = [b for b in range(n_buckets) if b not in done]
 
@@ -122,7 +155,7 @@ def run_extraction_job(
         # append here duplicated metrics rows for every bucket whose
         # manifest commit had not landed). Committed buckets are not in
         # `remaining`, so their partitions are untouched.
-        written = spark.read.parquet(output_path).where(F.col("bucket").isin(remaining))
+        written = spark.read.schema(OUTPUT_SCHEMA).parquet(output_path).where(F.col("bucket").isin(remaining))
         metrics = bucketed_partition_metrics(written, run_id)
         (
             metrics.write.mode("overwrite")
@@ -130,17 +163,15 @@ def run_extraction_job(
             .partitionBy("run_id", "bucket")
             .parquet(metrics_path)
         )
-        manifest_rows = {
-            r["bucket"]: r
-            for r in spark.read.parquet(metrics_path)
+        per_bucket = {
+            r["bucket"]: r.asDict()
+            for r in spark.read.schema(METRICS_SCHEMA)
+            .parquet(metrics_path)
             .where((F.col("run_id") == run_id) & F.col("bucket").isin(remaining))
             .groupBy("bucket")
             .agg(
-                F.sum("input_turns").alias("input_turns"),
-                F.sum("output_turns").alias("output_turns"),
-                F.sum("parse_failures").alias("parse_failures"),
-                F.sum("bytes_processed").alias("bytes_processed"),
-                F.max("committed_at").alias("committed_at"),
+                *(F.sum(c).alias(c) for c in _SUMS),
+                F.unix_micros(F.max("committed_at")).alias("committed_at"),
             )
             .collect()
         }
@@ -152,41 +183,19 @@ def run_extraction_job(
         # the same resume contract: a bucket is committed iff its
         # manifest row is readable, and the data write preceding it is
         # idempotent dynamic overwrite either way.
-        now = datetime.datetime.now(datetime.timezone.utc)
-        data = []
-        for bucket in remaining:
-            row = manifest_rows.get(bucket)
-            if row is None:
-                # a bucket can legitimately receive zero rows (hash gap
-                # at tiny inputs); commit it empty so resume skips it.
-                data.append((run_id, bucket, 0, 0, 0, 0, now))
-            else:
-                data.append(
-                    (
-                        run_id,
-                        bucket,
-                        row["input_turns"],
-                        row["output_turns"],
-                        row["parse_failures"],
-                        row["bytes_processed"],
-                        row["committed_at"],
-                    )
-                )
-        append_rows(spark, spark.createDataFrame(data, MANIFEST_SCHEMA).coalesce(1), manifest_path)
+        #
+        # A bucket can legitimately receive zero rows (hash gap at tiny
+        # inputs); commit it empty so resume skips it.
+        now_us = time.time_ns() // 1000
+        empty = {**dict.fromkeys(_SUMS, 0), "committed_at": now_us}
+        batch = [{**per_bucket.get(b, empty), "run_id": run_id, "bucket": b} for b in remaining]
+        table = pa.Table.from_pylist(batch, schema=to_arrow_schema(MANIFEST_SCHEMA))
+        append_rows(spark, spark.createDataFrame(table, MANIFEST_SCHEMA).coalesce(1), manifest_path)
+        manifest_rows.extend(batch)
         result.buckets_run.extend(remaining)
 
-    totals = (
-        spark.read.parquet(manifest_path)
-        .where(F.col("run_id") == run_id)
-        .agg(
-            F.sum("input_turns").alias("i"),
-            F.sum("output_turns").alias("o"),
-            F.sum("parse_failures").alias("f"),
-        )
-        .collect()[0]
+    result.input_turns, result.output_turns, result.parse_failures = (
+        sum(r[c] for r in manifest_rows) for c in _TOTALS
     )
-    result.input_turns = totals["i"] or 0
-    result.output_turns = totals["o"] or 0
-    result.parse_failures = totals["f"] or 0
     result.wall_seconds = time.time() - started
     return result

@@ -10,16 +10,15 @@ North_rule requirements:
 Implementation notes for this sandbox: the metrics/manifest tables are
 parquet directories written via the same DataFrame API an Iceberg
 catalog would take (``saveAsTable``/``writeTo(...).append()`` on a real
-deployment — swap ``_append`` only). Commit protocol: data for bucket K
-is written under ``<output>/bucket=K/`` first; the manifest row for K
-is appended only after that write completes, so a crash between the
-two leaves a re-runnable (idempotent, overwritten on retry) bucket.
+deployment — swap :func:`append_rows` only). Commit protocol: data for
+bucket K is written under ``<output>/bucket=K/`` first; the manifest row
+for K is appended only after that write completes, so a crash between
+the two leaves a re-runnable (idempotent, overwritten on retry) bucket.
 """
 
 from __future__ import annotations
 
 import datetime
-from typing import List, Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,12 +57,6 @@ METRICS_SCHEMA = StructType(
 )
 
 
-def partition_metrics(extracted: DataFrame, run_id: str, bucket: int) -> DataFrame:
-    """Aggregate per-partition lineage from the extraction output's
-    lineage columns — one columnar agg, no recompute of the stage."""
-    return bucketed_partition_metrics(extracted.withColumn("bucket", F.lit(bucket).cast("int")), run_id)
-
-
 def bucketed_partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-(bucket, partition) lineage for EVERY bucket present, in one
     aggregation — the job's commit phase calls this once over a single
@@ -89,15 +82,6 @@ def bucketed_partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
             F.lit(datetime.datetime.now(datetime.timezone.utc)).alias("committed_at"),
         )
     )
-
-
-def committed_buckets(spark: SparkSession, manifest_path: str, run_id: str) -> Set[int]:
-    try:
-        manifest = spark.read.parquet(manifest_path)
-    except Exception:  # noqa: BLE001 — no manifest yet
-        return set()
-    rows = manifest.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
 
 
 def append_rows(spark: SparkSession, df: DataFrame, path: str) -> None:

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 EOW = "\x17"
@@ -143,6 +144,17 @@ def test_bpe_exhaustion_stops_cleanly(spark):
     assert model.count() == 2  # (a,b) then (ab, EOW) — then nothing left
     out = bpe_token_count(df, merges=model).collect()[0]
     assert (out.n_words, out.n_tokens) == (4, 4)
+
+
+def test_bpe_train_rejects_word_freq_count_without_word_freq(spark):
+    """``word_freq_count`` is the row count of a caller's ``word_freq``
+    table; alone it would stand in for the count of a table the
+    function builds itself, so it is refused."""
+    from fundus_spark.operators import bpe_train
+
+    df = spark.createDataFrame([(0, "ab ab")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="word_freq_count"):
+        bpe_train(df, n_merges=2, word_freq_count=1)
 
 
 def test_bpe_corpus_side_plan_is_jvm_only_broadcast_join(spark):

@@ -1,4 +1,4 @@
-"""End-to-end Spark pipeline tests: transcripts table -> mapInPandas
+"""End-to-end Spark pipeline tests: transcripts table -> mapInArrow
 extraction -> ordered reassembly -> lineage/metrics -> resume.
 
 The golden transcript rows must extract to byte-identical values vs the
@@ -104,6 +104,22 @@ def test_assemble_conversations_order_and_content(spark, extracted_df):
     assert row["n_turns"] == len([r for r in per_turn if r["plaintext"] is not None])
 
 
+def _manifest_totals(spark, manifest, run_id):
+    """(input_turns, output_turns, parse_failures) summed over the run's
+    manifest rows — what ``JobResult`` must report."""
+    row = (
+        spark.read.parquet(manifest)
+        .where(F.col("run_id") == run_id)
+        .agg(*(F.sum(c) for c in ("input_turns", "output_turns", "parse_failures")))
+        .collect()[0]
+    )
+    return tuple(row)
+
+
+def _result_totals(res):
+    return (res.input_turns, res.output_turns, res.parse_failures)
+
+
 def test_job_resume_skips_committed_buckets(spark, transcripts_df, tmp_path):
     out = str(tmp_path / "out")
     metrics = str(tmp_path / "metrics")
@@ -115,12 +131,19 @@ def test_job_resume_skips_committed_buckets(spark, transcripts_df, tmp_path):
     assert sorted(first.buckets_run) == [0, 1, 2, 3]
     assert first.input_turns == transcripts_df.count()
     assert first.parse_failures == 0
+    assert _result_totals(first) == _manifest_totals(spark, manifest, "testrun")
 
+    # an all-skipped resume only reads the manifest: one Spark job
+    spark.sparkContext.setJobGroup("resume_all_skipped", "all-skipped resume")
     second = run_extraction_job(
         spark, transcripts_df, out, metrics, manifest, run_id="testrun", n_buckets=4, salt_partitions=8
     )
+    n_jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup("resume_all_skipped"))
+    spark.sparkContext.setJobGroup("default", "")
     assert second.buckets_run == []
     assert sorted(second.buckets_skipped) == [0, 1, 2, 3]
+    assert n_jobs <= 1, n_jobs
+    assert _result_totals(second) == _result_totals(first)
 
     # lineage rows exist per partition with sane counts
     m = spark.read.parquet(metrics)
@@ -144,14 +167,18 @@ def test_job_readback_is_partition_pruned(spark, transcripts_df, tmp_path):
         n_buckets=4,
         salt_partitions=8,
     )
+    from fundus_spark.plans.job import OUTPUT_SCHEMA
+
+    # the job reads with the known schema; an inferred read must prune too
     for bucket in (0, 3):
-        pruned = spark.read.parquet(out).where(F.col("bucket").isin([bucket]))
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        # the bucket predicate must land in PartitionFilters (directory
-        # prune), not PushedFilters/post-scan Filter (data read + drop)
-        partition_filters = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert partition_filters and "bucket" in partition_filters[0], plan
-        assert pruned.count() > 0, f"bucket {bucket} read back empty"
+        for reader in (spark.read.schema(OUTPUT_SCHEMA), spark.read):
+            pruned = reader.parquet(out).where(F.col("bucket").isin([bucket]))
+            plan = pruned._jdf.queryExecution().executedPlan().toString()
+            # the bucket predicate must land in PartitionFilters (directory
+            # prune), not PushedFilters/post-scan Filter (data read + drop)
+            partition_filters = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+            assert partition_filters and "bucket" in partition_filters[0], plan
+            assert pruned.count() > 0, f"bucket {bucket} read back empty"
 
 
 def test_malformed_html_degrades_not_fails(spark):
@@ -214,10 +241,11 @@ def test_job_partial_resume_single_pass(spark, transcripts_df, tmp_path):
     manifest = str(tmp_path / "manifest")
 
     # pre-commit buckets 0 and 2 in the manifest (simulating a crash
-    # after their commit points)
+    # after their commit points); nonzero totals, so JobResult must
+    # count the committed rows as well as the ones it appends
     now = datetime.datetime.now(datetime.timezone.utc)
     pre = spark.createDataFrame(
-        [("partial", b, 0, 0, 0, 0, now) for b in (0, 2)], schema=MANIFEST_SCHEMA
+        [("partial", b, 10 + b, 9 + b, 1, 100, now) for b in (0, 2)], schema=MANIFEST_SCHEMA
     )
     pre.write.mode("append").parquet(manifest)
 
@@ -226,6 +254,8 @@ def test_job_partial_resume_single_pass(spark, transcripts_df, tmp_path):
     )
     assert sorted(res.buckets_run) == [1, 3]
     assert sorted(res.buckets_skipped) == [0, 2]
+    assert _result_totals(res) == _manifest_totals(spark, manifest, "partial")
+    assert res.parse_failures == 2  # the pre-committed rows' failures only
     import os
 
     written = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
@@ -288,6 +318,10 @@ def test_job_commit_phase_job_count_bucket_independent(spark, transcripts_df, tm
     # the commit phase is now one metrics write + one manifest append
     # regardless of bucket count — 4 extra buckets may add ~0 jobs
     assert n6 - n2 <= 2, (n2, n6)
+    # absolute budget (plans/job.py docstring): data write, metrics
+    # write and metrics collect at two jobs each, one manifest append;
+    # no schema-inference read and no manifest re-read
+    assert n2 <= 7, n2
 
 
 def test_spark_submit_deployment_smoke(spark, transcripts_df, tmp_path):
