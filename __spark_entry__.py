@@ -504,7 +504,7 @@ def _minhash_xxhash_sql(n_perm: int = 8, k: int = 4) -> str:
     (XXH64, seed 42) reimplemented in pure DuckDB SQL — HUGEINT modular
     arithmetic with overflow-safe split multiplication, recursive CTEs
     over byte positions (fundus_spark/xxh64_sql.py, self-tested against
-    Spark ground truth in tools/xxh64_sql.py). Upgrades minhash_xxhash
+    Spark ground truth in tests/test_xxh64_sql.py). Upgrades minhash_xxhash
     from a rows-only check to a fully value-gated query."""
     from fundus_spark.xxh64_sql import xxh64_hash_cte
 

@@ -79,11 +79,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Only fingerprints with >1 member (the dup report)."""
-    return exact_dedup(df, text_col, id_col).where(F.col("n_dups") > 1)
-
-
 def shingle_relation(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 4) -> DataFrame:
     # the explode multiplies per-row work ~|tokens|-fold and every
     # consumer hashes each shingle — lift a small under-partitioned
@@ -270,7 +265,6 @@ def ngram_jaccard_pairs(
         shingles = shingle_relation(df, text_col, id_col, k).distinct().localCheckpoint(
             eager=True
         )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
     if candidates is not None:
         # candidates path (round 8): verify via per-doc DISTINCT shingle
@@ -324,6 +318,7 @@ def ngram_jaccard_pairs(
             .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
             .agg(F.count(F.lit(1)).alias("inter"))
         )
+        sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     joined = (
         pair_intersections.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")

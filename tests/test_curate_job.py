@@ -9,6 +9,9 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from fundus_spark.plans import curate_corpus, run_curate_job
 
 
@@ -62,12 +65,54 @@ def test_job_resumes_from_last_committed_stage(spark, tmp_path):
     assert r.rows_out > 0
 
 
-def test_curate_materialization_flag_does_not_change_results(spark):
-    docs = _docs(spark)
-    a = curate_corpus(docs, jaccard_threshold=0.2, materialize_stages=True)
-    b = curate_corpus(docs, jaccard_threshold=0.2, materialize_stages=False)
-    key = lambda r: (r.doc_id, r.split, r.pack_offset, r.pack_bin)  # noqa: E731
-    assert {key(r) for r in a.collect()} == {key(r) for r in b.collect()}
+def _mojibake_twins(docs):
+    """Accented texts; ids >= 15 carry the mis-decoded copy, so only the
+    repair makes them exact dups of their clean twins."""
+    from fundus_spark.operators import make_mojibake
+
+    text = F.regexp_replace("text", "w", "é")
+    return docs.withColumn("text", F.when(F.col("doc_id") >= 15, make_mojibake(text)).otherwise(text))
+
+
+def _fitted_quality_model(docs):
+    from fundus_spark.operators import quality_classifier_fit
+
+    labeled = docs.withColumn("y", (F.col("doc_id") % 6 != 0).cast("int"))
+    model = quality_classifier_fit(labeled, n_features=32, n_iter=8, lr=0.0625, salt="t")
+    return {"quality_model": model, "quality_salt": "t"}
+
+
+# case -> (input transform, options built from the transformed input)
+EQUIVALENCE_CASES = {
+    "renamed_columns": (
+        lambda d: d.withColumnRenamed("text", "body").withColumnRenamed("doc_id", "id"),
+        lambda d: {"text_col": "body", "id_col": "id"},
+    ),
+    "repair_mojibake": (_mojibake_twins, lambda d: {"repair_mojibake": True}),
+    "line_dedup_min_occ": (
+        lambda d: d.withColumn("text", F.concat("text", F.lit("\nshared footer on every page"))),
+        lambda d: {"line_dedup_min_occ": 10},
+    ),
+    "quality_model": (lambda d: d, _fitted_quality_model),
+    "ccnet": (lambda d: d, lambda d: {"ccnet_target": d.where("doc_id % 6 < 3"), "ccnet_n_buckets": 3}),
+    "no_bucket_cap": (lambda d: d, lambda d: {"lsh_bucket_cap": None}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EQUIVALENCE_CASES))
+def test_durable_job_equals_in_session_chain(spark, tmp_path, case):
+    """run_curate_job and curate_corpus run one chain definition, so
+    every option gives the same corpus durably and in session."""
+    prepare, options = EQUIVALENCE_CASES[case]
+    docs = prepare(_docs(spark))
+    opts = {"jaccard_threshold": 0.2, **options(docs)}
+    id_col = opts.get("id_col", "doc_id")
+    wd = str(tmp_path / "wd")
+    run_curate_job(spark, docs, wd, **opts)
+    key = lambda r: (r[id_col], r.split, r.n_tokens, r.pack_offset, r.pack_bin)  # noqa: E731
+    got = {key(r) for r in spark.read.parquet(os.path.join(wd, "final")).collect()}
+    want = {key(r) for r in curate_corpus(docs, **opts).collect()}
+    assert got == want and got
 
 
 # ---------------------------------------------------------------------------
@@ -87,6 +132,17 @@ def test_increment_with_empty_frozen_equals_full_curate(spark):
     got = {(r.doc_id, r.split, r.n_tokens, r.pack_offset, r.pack_bin) for r in inc.collect()}
     want = {(r.doc_id, r.split, r.n_tokens, r.pack_offset, r.pack_bin) for r in full.collect()}
     assert got == want and got
+
+
+def test_increment_rejects_full_run_only_options(spark):
+    """Line dedup, mojibake repair and sampled CCNet cutoffs depend on
+    the whole batch or were never applied to the frozen corpus."""
+    from fundus_spark.plans import curate_increment
+
+    docs = _docs(spark)
+    for option in ({"repair_mojibake": True}, {"line_dedup_min_occ": 3}, {"ccnet_sample_mod": 4}):
+        with pytest.raises(TypeError, match="full-run options"):
+            curate_increment(docs, docs, **option)
 
 
 def test_increment_of_already_curated_batch_is_empty(spark):
